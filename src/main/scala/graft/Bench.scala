@@ -54,30 +54,6 @@ object Bench {
     * the single (cold) pass is reported as-is. */
   val secondPassBarSec = 1.0
 
-  private def session(cpus: String): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
-  private def jsonEscape(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-
   /** Per-query metrics from a prior committed artifact's "queries" object
     * (cross-round outlier detection: an in-suite median can sit 2-5x above
     * its cross-run minimum under uniform suite-position pressure — round-12
@@ -97,15 +73,29 @@ object Bench {
     } catch { case _: Throwable => Map.empty }
   }
 
+  /** Counts the Structured Streaming queries started on `spark`.
+    * QueryStartedEvent is posted synchronously from the starting thread, so
+    * a before/after diff around one run attributes starts to that run even
+    * though the other listener callbacks are async. */
+  def streamStartCounter(spark: SparkSession): AtomicInteger = {
+    val n = new AtomicInteger(0)
+    spark.streams.addListener(new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        n.incrementAndGet()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    })
+    n
+  }
+
   def main(args: Array[String]): Unit = {
     val m0 = System.nanoTime()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       "/root/repo/BENCH_incremental.json")
     val prior = priorMetrics(sys.env.getOrElse("SPARK_GRAFT_BENCH_PRIOR",
       "/root/repo/BENCH_PRIOR.json"))
-    val spark = session(cpus)
+    val spark = GraftSession(GraftSession.envCpus)
     // Optional name-regex filter for single-query iteration (dev only; the
     // driver never sets it, so the recorded bench always covers the suite).
     val queries = sys.env.get("SPARK_GRAFT_ONLY")
@@ -113,17 +103,8 @@ object Bench {
       .getOrElse(SparkEntry.queries)
     val streamingSet = SparkEntry.streamingQueries.filter(queries.contains)
     val stagedSet = SparkEntry.stagedQueries.filter(queries.contains)
-    // Runtime cross-check of the declared streaming set: QueryStartedEvent
-    // is posted synchronously from the starting thread, so a per-query
-    // before/after counter diff attributes starts correctly even though
-    // the other listener callbacks are async.
-    val streamStarts = new AtomicInteger(0)
-    spark.streams.addListener(new StreamingQueryListener {
-      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
-        streamStarts.incrementAndGet()
-      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    })
+    // runtime cross-check of the declared streaming set
+    val streamStarts = streamStartCounter(spark)
     val undeclaredStreaming = scala.collection.mutable.LinkedHashSet.empty[String]
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // `loud` marks TIMED runs: errors print AND land in the artifact, and
@@ -189,7 +170,7 @@ object Bench {
         .mkString("[", ",", "]")
       val undeclJson = undeclaredStreaming.map(n => s"\"$n\"").mkString("[", ",", "]")
       val errJson = errors
-        .map { case (k, v) => s"\"$k\":\"${jsonEscape(v)}\"" }
+        .map { case (k, v) => s"\"$k\":${Json.quote(v)}" }
         .mkString("{", ",", "}")
       val mainWall = (System.nanoTime() - m0) / 1e9
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
@@ -260,7 +241,7 @@ object Bench {
     if (flagged.nonEmpty) {
       spark.stop()
       flagged.foreach { name =>
-        val s2 = session(cpus)
+        val s2 = GraftSession(GraftSession.envCpus)
         val fn = queries(name)
         try fn(s2, sfDir).queryExecution.toRdd.count() // fresh-context warm
         catch { case _: Throwable => () }

@@ -2,7 +2,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Shared between [[Bench]] and [[Verify]]: releases every piece of
-  * per-query persisted state between suite queries so a 278-query run's
+  * per-query persisted state between suite queries so a full-suite run's
   * storage footprint stays bounded (round-10 forensics: leaked
   * localCheckpoint blocks starved execution until the suite tail measured
   * 2–10× slow — q126 3.2 s isolated vs 51.9 s in-suite). */

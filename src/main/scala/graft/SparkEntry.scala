@@ -1,11 +1,13 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
+import graft.queries.Query
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
-  * `queries` aggregates every declared operator query (SURVEY.md §2.2/§2.3);
-  * `oracleSql` carries the DuckDB-equivalent SQL for the hash-compare gate.
-  * Query modules live under `graft.queries`.
+  * Every map and set here is derived from the query modules' `declared`
+  * lists (one [[Query]] per query, under `graft.queries`): `queries` maps
+  * each name to its build, `oracleSql` to the DuckDB-equivalent SQL for the
+  * hash-compare gate, and the two sets follow from each query's kind.
   */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
@@ -15,53 +17,38 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q33_freshen_merged")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.Relational.queries ++ graft.queries.LlmOps.queries ++
-      graft.queries.Freshen.queries ++ graft.queries.Extended.queries ++
-      graft.queries.Pipeline.queries ++ graft.queries.Curation.queries ++
-      graft.queries.Scale.queries ++ graft.queries.Analytics.queries
+  /** Every declared query, in module order. */
+  val declared: Seq[Query] =
+    graft.queries.Relational.declared ++ graft.queries.LlmOps.declared ++
+      graft.queries.Freshen.declared ++ graft.queries.Extended.declared ++
+      graft.queries.Pipeline.declared ++ graft.queries.Curation.declared ++
+      graft.queries.Scale.declared ++ graft.queries.Analytics.declared
 
-  /** Query keys that run a Structured Streaming replay to completion on
-    * every invocation (31 micro-batch one-day-per-trigger staged files —
-    * the determinism device described in BASELINE.md). Their cost is a
-    * scale-independent per-batch floor, not a plan cost, so [[Bench]]
-    * (a) skips them in the sf0.001 warmup (the floor is paid again at the
-    * target SF anyway), and (b) times them ONCE instead of median-of-3
-    * (their variance IS the floor — re-running buys no signal, and the
-    * 5x-execution structure is what blew the driver's 60-minute budget in
-    * round 11: BENCH_r11.json rc=124). Bench cross-checks this set at
-    * runtime with a StreamingQueryListener and reports any undeclared
-    * streaming query in the artifact (`undeclared_streaming`). */
-  val streamingQueries: Set[String] = Set(
-    "q34_streaming_freshen", "q44_streaming_window", "q53_streaming_sessions",
-    "q63_streaming_dedup", "q78_stream_join", "q81_stream_ingest",
-    "q91_stream_hll", "q95_stream_funnel", "q112_stream_decontam",
-    "q117_stream_quota", "q127_stream_ann", "q134_stream_chunk_dedup",
-    "q139_stream_scd2", "q146_stream_topk", "q172_stream_rate",
-    "q190_stream_late", "q207_stream_substr", "q210_stream_substr_late",
-    "q217_stream_psi", "q233_stream_cusum", "q266_stream_histq",
-    "q281_stream_outer_join", "q284_stream_session_window", "q285_ttl_dedup",
-    "q295_running_balance", "q304_timer_sessions", "q306_type_counts",
-    "q307_recent_purchases")
+  locally {
+    val dups = declared.groupBy(_.name).collect { case (n, qs) if qs.size > 1 => n }
+    require(dups.isEmpty, s"query names declared more than once: ${dups.mkString(", ")}")
+  }
 
-  /** Query keys that build a store or staged file layout on FIRST touch of
-    * an sf dir (streaming replays above, plus TxStore commit sequences,
-    * the q45 bucketed-table write, and the q157 incremental MV). Bench's
-    * pre-stage pass executes exactly this set at the target SF so the
-    * one-off staging cost never lands inside a timed pass — re-executing
-    * all ~300 queries there (654 s in round 11) is what this set replaces. */
-  val stagedQueries: Set[String] = streamingQueries ++ Set(
-    "q45_bucketed_join", "q69_tx_upsert", "q70_tx_time_travel",
-    "q82_tx_changes", "q90_zonemap_read", "q92_incremental_agg",
-    "q93_index_lookup", "q94_tx_delete", "q128_tx_compact",
-    "q133_tx_evolve", "q152_tx_expire", "q157_stream_mv")
+  /** Name → Spark build of every declared query. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    declared.map(q => q.name -> q.build).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    graft.queries.Relational.oracleSql ++ graft.queries.LlmOps.oracleSql ++
-      graft.queries.Freshen.oracleSql ++ graft.queries.Extended.oracleSql ++
-      graft.queries.Pipeline.oracleSql ++ graft.queries.Curation.oracleSql ++
-      graft.queries.Scale.oracleSql ++ graft.queries.Analytics.oracleSql
+    * the same parquet tables. */
+  val oracleSql: Map[String, String] = declared.map(q => q.name -> q.oracleSql).toMap
+
+  /** Queries that run a Structured Streaming replay on every invocation.
+    * Their cost is a scale-independent per-batch floor, not a plan cost, so
+    * [[Bench]] times them once instead of taking a second pass. Bench and
+    * DeterminismSpec cross-check the kinds at runtime with a
+    * StreamingQueryListener. */
+  val streamingQueries: Set[String] =
+    declared.filter(_.kind == Query.Streaming).map(_.name).toSet
+
+  /** Queries that build a store or staged file layout on FIRST touch of an
+    * sf dir (every non-batch kind). Bench's pre-stage pass executes exactly
+    * this set at the target SF so the one-off staging cost never lands
+    * inside a timed pass. */
+  val stagedQueries: Set[String] =
+    declared.filter(_.kind != Query.Batch).map(_.name).toSet
 }

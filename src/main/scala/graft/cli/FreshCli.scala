@@ -60,10 +60,10 @@ object FreshCli {
   }
 
   /** Parquet-footer schema lookup for validation; the Spark session spins up
-    * lazily — registry-only verbs never pay for it. */
+    * lazily — registry-only verbs never pay for it. A session already running
+    * in the process is reused as it is: the CLI must not reconfigure it. */
   private def schemaOf(dataDir: String): String => Option[StructType] = {
-    lazy val spark = SparkSession.builder().master("local[1]")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    lazy val spark = SparkSession.getDefaultSession.getOrElse(graft.GraftSession(1))
     name => {
       val p = s"$dataDir/$name.parquet"
       if (Files.exists(Paths.get(p))) Some(spark.read.parquet(p).schema) else None

@@ -53,9 +53,12 @@ final case class Capsule(
   * and are picked up by the next run — the "late commit" equivalence
   * (`test/impl/TestInternalFreshKijiTableReader.java:497-506`).
   *
-  * Scale: all per-row work is expression-level (whole-stage codegen); the
-  * only shuffles are the scored-rows equi-join back onto the slice (broadcast
-  * when the scored set is small) and any aggregation inside a Scorer.
+  * Scale: all per-row work is expression-level (whole-stage codegen). The
+  * scored rows left-join back onto the slice with the join strategy the
+  * planner picks. Every key set joined in (the budget keys, the unscored
+  * keys, a write-back's scored keys and touched partitions) carries an
+  * unconditional `broadcast(...)` hint, whatever its size. Any aggregation
+  * inside a Scorer adds its own shuffles.
   */
 final class FreshReader(
     val manager: FreshnessManager,
@@ -123,7 +126,6 @@ final class FreshReader(
     * footprint [[writeBackDelta]] needs. */
   private def freshenWithOutcomes(slice: DataFrame,
       capsules: Seq[Capsule]): (DataFrame, Seq[CapsuleOutcome]) = {
-    slice.sparkSession.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
     val outcomes = capsules.map(c => computeScored(slice, c))
 
     // allowPartial=false (the reference default, `FreshKijiTableReaderBuilder.java:63`):
@@ -215,13 +217,20 @@ final class FreshReader(
         .agg(map_from_entries(collect_list(struct(col("qualifier"), col("value"))))
           .as("__scores"))
       val fam = c.attachment.family
+      val cur = coalesce(col(fam), map())
+      val scores = col("__scores")
+      // duplicate-free by construction (no mapKeyDedupPolicy needed): scored
+      // qualifiers already present update in place, new ones append after
+      val updated = transform_values(cur, (q, cell) =>
+        when(map_contains_key(scores, q),
+          Cells.put(cell, lit(config.asOf), element_at(scores, q))).otherwise(cell))
+      val added = map_filter(
+        transform_values(scores, (q, v) =>
+          Cells.put(try_element_at(cur, q), lit(config.asOf), v)), // absent: null cell
+        (q, _) => !map_contains_key(cur, q))
       df.join(s, Seq(EntityView.EntityId), "left")
         .withColumn(fam,
-          when(col("__scores").isNotNull,
-            map_concat(coalesce(col(fam), map()),
-              transform_values(col("__scores"), (q, v) =>
-                Cells.put(try_element_at(coalesce(col(fam), map()), q), lit(config.asOf), v))))
-          .otherwise(col(fam)))
+          when(scores.isNotNull, map_concat(updated, added)).otherwise(col(fam)))
         .drop("__scores")
     } else if (c.attachment.isFullyQualified) {
       val s = o.scored.withColumnRenamed("value", "__score")
@@ -243,8 +252,8 @@ final class FreshReader(
   def get(entityId: Any, request: DataRequest): DataFrame =
     freshenSlice(view.filter(col(EntityView.EntityId) === lit(entityId)), request)
 
-  /** Bulk fresh get over a key list (reference R3: `:777-806`) — the natural
-    * Spark case: small key sets broadcast-semi-join the table. */
+  /** Bulk fresh get over a key list (reference R3: `:777-806`): the keys
+    * become an `isin` filter on the entity id, not a join. */
   def bulkGet(entityIds: Seq[Any], request: DataRequest): DataFrame =
     freshenSlice(view.filter(col(EntityView.EntityId).isin(entityIds: _*)), request)
 

@@ -3950,146 +3950,74 @@ object Analytics {
        |  ${Ops.floorDivScaledSql("k * 1000000", "sum_ln_ppm", 1000000L, "//")} AS alpha_ppm
        |FROM agg""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q322_hill_tail" -> (q322HillTail _),
-    "q321_snips_eval" -> (q321SnipsEval _),
-    "q315_vocab_growth" -> (q315VocabGrowth _),
-    "q316_burstiness" -> (q316Burstiness _),
-    "q313_pmi_collocations" -> (q313PmiCollocations _),
-    "q314_mcnemar" -> (q314Mcnemar _),
-    "q310_welch_ttest" -> (q310WelchTtest _),
-    "q311_good_turing" -> (q311GoodTuring _),
-    "q312_trimmed_means" -> (q312TrimmedMeans _),
-    "q309_bootstrap_ci" -> (q309BootstrapCi _),
-    "q308_croston" -> (q308Croston _),
-    "q305_peak_concurrency" -> (q305PeakConcurrency _),
-    "q297_markov_attribution" -> (q297MarkovAttribution _),
-    "q298_shapley" -> (q298Shapley _),
-    "q300_change_point" -> (q300ChangePoint _),
-    "q251_spearman" -> (q251Spearman _),
-    "q256_holt_winters" -> (q256HoltWinters _),
-    "q262_isotonic_calibration" -> (q262IsotonicCalibration _),
-    "q267_nelson_aalen" -> (q267NelsonAalen _),
-    "q263_average_precision" -> (q263AveragePrecision _),
-    "q257_mase_eval" -> (q257MaseEval _),
-    "q252_mann_whitney" -> (q252MannWhitney _),
-    "q253_cramers_v" -> (q253CramersV _),
-    "q254_hhi" -> (q254Hhi _),
-    "q255_theil_sen" -> (q255TheilSen _),
-    "q153_skyline" -> (q153Skyline _),
-    "q154_hist_quantiles" -> (q154HistQuantiles _),
-    "q155_corr_pieces" -> (q155CorrPieces _),
-    "q166_auc_eval" -> (q166AucEval _),
-    "q168_ab_lift" -> (q168AbLift _),
-    "q169_mad_outliers" -> (q169MadOutliers _),
-    "q171_path_trigrams" -> (q171PathTrigrams _),
-    "q173_trend_fit" -> (q173TrendFit _),
-    "q174_kappa" -> (q174Kappa _),
-    "q176_target_encoding" -> (q176TargetEncoding _),
-    "q181_mutual_info" -> (q181MutualInfo _),
-    "q183_calibration" -> (q183Calibration _),
-    "q184_psi_drift" -> (q184PsiDrift _),
-    "q185_attribution" -> (q185Attribution _),
-    "q188_auc_by_group" -> (q188AucByGroup _),
-    "q189_best_threshold" -> (q189BestThreshold _),
-    "q191_linear_attribution" -> (q191LinearAttribution _),
-    "q192_session_stats" -> (q192SessionStats _),
-    "q193_conversion_hazard" -> (q193ConversionHazard _),
-    "q194_dup_histogram" -> (q194DupHistogram _),
-    "q195_source_f1" -> (q195SourceF1 _),
-    "q196_gains_table" -> (q196GainsTable _),
-    "q197_weighted_sample" -> (q197WeightedSample _),
-    "q198_ref_integrity" -> (q198RefIntegrity _),
-    "q201_repurchase_cadence" -> (q201RepurchaseCadence _),
-    "q202_revenue_gini" -> (q202RevenueGini _),
-    "q203_corpus_gini" -> (q203CorpusGini _),
-    "q177_zipf_fit" -> (q177ZipfFit _),
-    "q178_char_entropy" -> (q178CharEntropy _),
-    "q179_ks_stat" -> (q179KsStat _),
-    "q211_kaplan_meier" -> (q211KaplanMeier _),
-    "q212_autocorr" -> (q212Autocorr _),
-    "q216_cuped" -> (q216Cuped _),
-    "q219_ses" -> (q219Ses _),
-    "q220_sprt" -> (q220Sprt _),
-    "q222_holt" -> (q222Holt _),
-    "q230_cusum" -> (q230Cusum _),
-    "q231_chi_square" -> (q231ChiSquare _),
-    "q234_fano_factor" -> (q234FanoFactor _),
-    "q235_trimmed_mean" -> (q235TrimmedMean _),
-    "q236_benford" -> (q236Benford _),
-    "q238_kendall_tau" -> (q238KendallTau _),
-    "q244_abc_classes" -> (q244AbcClasses _),
-    "q292_ols_trend" -> (q292OlsTrend _))
-
-  val oracleSql: Map[String, String] = Map(
-    "q322_hill_tail" -> q322Sql,
-    "q321_snips_eval" -> q321Sql,
-    "q305_peak_concurrency" -> q305Sql,
-    "q308_croston" -> q308Sql,
-    "q313_pmi_collocations" -> q313Sql,
-    "q314_mcnemar" -> q314Sql,
-    "q315_vocab_growth" -> q315Sql,
-    "q316_burstiness" -> q316Sql,
-    "q310_welch_ttest" -> q310Sql,
-    "q311_good_turing" -> q311Sql,
-    "q312_trimmed_means" -> q312Sql,
-    "q309_bootstrap_ci" -> q309Sql,
-    "q297_markov_attribution" -> q297Sql,
-    "q298_shapley" -> q298Sql,
-    "q300_change_point" -> q300Sql,
-    "q251_spearman" -> q251Sql,
-    "q256_holt_winters" -> q256Sql,
-    "q262_isotonic_calibration" -> q262Sql,
-    "q267_nelson_aalen" -> q267Sql,
-    "q263_average_precision" -> q263Sql,
-    "q257_mase_eval" -> q257Sql,
-    "q252_mann_whitney" -> q252Sql,
-    "q253_cramers_v" -> q253Sql,
-    "q254_hhi" -> q254Sql,
-    "q255_theil_sen" -> q255Sql,
-    "q153_skyline" -> q153Sql,
-    "q154_hist_quantiles" -> q154Sql,
-    "q155_corr_pieces" -> q155Sql,
-    "q166_auc_eval" -> q166Sql,
-    "q168_ab_lift" -> q168Sql,
-    "q169_mad_outliers" -> q169Sql,
-    "q171_path_trigrams" -> q171Sql,
-    "q173_trend_fit" -> q173Sql,
-    "q174_kappa" -> q174Sql,
-    "q176_target_encoding" -> q176Sql,
-    "q181_mutual_info" -> q181Sql,
-    "q183_calibration" -> q183Sql,
-    "q184_psi_drift" -> q184Sql,
-    "q185_attribution" -> q185Sql,
-    "q188_auc_by_group" -> q188Sql,
-    "q189_best_threshold" -> q189Sql,
-    "q191_linear_attribution" -> q191Sql,
-    "q192_session_stats" -> q192Sql,
-    "q193_conversion_hazard" -> q193Sql,
-    "q194_dup_histogram" -> q194Sql,
-    "q195_source_f1" -> q195Sql,
-    "q196_gains_table" -> q196Sql,
-    "q197_weighted_sample" -> q197Sql,
-    "q198_ref_integrity" -> q198Sql,
-    "q201_repurchase_cadence" -> q201Sql,
-    "q202_revenue_gini" -> q202Sql,
-    "q203_corpus_gini" -> q203Sql,
-    "q177_zipf_fit" -> q177Sql,
-    "q178_char_entropy" -> q178Sql,
-    "q179_ks_stat" -> q179Sql,
-    "q211_kaplan_meier" -> q211Sql,
-    "q212_autocorr" -> q212Sql,
-    "q216_cuped" -> q216Sql,
-    "q219_ses" -> q219Sql,
-    "q220_sprt" -> q220Sql,
-    "q222_holt" -> q222Sql,
-    "q230_cusum" -> q230Sql,
-    "q231_chi_square" -> q231Sql,
-    "q234_fano_factor" -> q234Sql,
-    "q235_trimmed_mean" -> q235Sql,
-    "q236_benford" -> q236Sql,
-    "q238_kendall_tau" -> q238Sql,
-    "q244_abc_classes" -> q244Sql,
-    "q292_ols_trend" -> q292Sql)
-
+  val declared: Seq[Query] = Seq(
+    Query("q322_hill_tail", q322HillTail, q322Sql),
+    Query("q321_snips_eval", q321SnipsEval, q321Sql),
+    Query("q315_vocab_growth", q315VocabGrowth, q315Sql),
+    Query("q316_burstiness", q316Burstiness, q316Sql),
+    Query("q313_pmi_collocations", q313PmiCollocations, q313Sql),
+    Query("q314_mcnemar", q314Mcnemar, q314Sql),
+    Query("q310_welch_ttest", q310WelchTtest, q310Sql),
+    Query("q311_good_turing", q311GoodTuring, q311Sql),
+    Query("q312_trimmed_means", q312TrimmedMeans, q312Sql),
+    Query("q309_bootstrap_ci", q309BootstrapCi, q309Sql),
+    Query("q308_croston", q308Croston, q308Sql),
+    Query("q305_peak_concurrency", q305PeakConcurrency, q305Sql),
+    Query("q297_markov_attribution", q297MarkovAttribution, q297Sql),
+    Query("q298_shapley", q298Shapley, q298Sql),
+    Query("q300_change_point", q300ChangePoint, q300Sql),
+    Query("q251_spearman", q251Spearman, q251Sql),
+    Query("q256_holt_winters", q256HoltWinters, q256Sql),
+    Query("q262_isotonic_calibration", q262IsotonicCalibration, q262Sql),
+    Query("q267_nelson_aalen", q267NelsonAalen, q267Sql),
+    Query("q263_average_precision", q263AveragePrecision, q263Sql),
+    Query("q257_mase_eval", q257MaseEval, q257Sql),
+    Query("q252_mann_whitney", q252MannWhitney, q252Sql),
+    Query("q253_cramers_v", q253CramersV, q253Sql),
+    Query("q254_hhi", q254Hhi, q254Sql),
+    Query("q255_theil_sen", q255TheilSen, q255Sql),
+    Query("q153_skyline", q153Skyline, q153Sql),
+    Query("q154_hist_quantiles", q154HistQuantiles, q154Sql),
+    Query("q155_corr_pieces", q155CorrPieces, q155Sql),
+    Query("q166_auc_eval", q166AucEval, q166Sql),
+    Query("q168_ab_lift", q168AbLift, q168Sql),
+    Query("q169_mad_outliers", q169MadOutliers, q169Sql),
+    Query("q171_path_trigrams", q171PathTrigrams, q171Sql),
+    Query("q173_trend_fit", q173TrendFit, q173Sql),
+    Query("q174_kappa", q174Kappa, q174Sql),
+    Query("q176_target_encoding", q176TargetEncoding, q176Sql),
+    Query("q181_mutual_info", q181MutualInfo, q181Sql),
+    Query("q183_calibration", q183Calibration, q183Sql),
+    Query("q184_psi_drift", q184PsiDrift, q184Sql),
+    Query("q185_attribution", q185Attribution, q185Sql),
+    Query("q188_auc_by_group", q188AucByGroup, q188Sql),
+    Query("q189_best_threshold", q189BestThreshold, q189Sql),
+    Query("q191_linear_attribution", q191LinearAttribution, q191Sql),
+    Query("q192_session_stats", q192SessionStats, q192Sql),
+    Query("q193_conversion_hazard", q193ConversionHazard, q193Sql),
+    Query("q194_dup_histogram", q194DupHistogram, q194Sql),
+    Query("q195_source_f1", q195SourceF1, q195Sql),
+    Query("q196_gains_table", q196GainsTable, q196Sql),
+    Query("q197_weighted_sample", q197WeightedSample, q197Sql),
+    Query("q198_ref_integrity", q198RefIntegrity, q198Sql),
+    Query("q201_repurchase_cadence", q201RepurchaseCadence, q201Sql),
+    Query("q202_revenue_gini", q202RevenueGini, q202Sql),
+    Query("q203_corpus_gini", q203CorpusGini, q203Sql),
+    Query("q177_zipf_fit", q177ZipfFit, q177Sql),
+    Query("q178_char_entropy", q178CharEntropy, q178Sql),
+    Query("q179_ks_stat", q179KsStat, q179Sql),
+    Query("q211_kaplan_meier", q211KaplanMeier, q211Sql),
+    Query("q212_autocorr", q212Autocorr, q212Sql),
+    Query("q216_cuped", q216Cuped, q216Sql),
+    Query("q219_ses", q219Ses, q219Sql),
+    Query("q220_sprt", q220Sprt, q220Sql),
+    Query("q222_holt", q222Holt, q222Sql),
+    Query("q230_cusum", q230Cusum, q230Sql),
+    Query("q231_chi_square", q231ChiSquare, q231Sql),
+    Query("q234_fano_factor", q234FanoFactor, q234Sql),
+    Query("q235_trimmed_mean", q235TrimmedMean, q235Sql),
+    Query("q236_benford", q236Benford, q236Sql),
+    Query("q238_kendall_tau", q238KendallTau, q238Sql),
+    Query("q244_abc_classes", q244AbcClasses, q244Sql),
+    Query("q292_ols_trend", q292OlsTrend, q292Sql))
 }

@@ -2737,113 +2737,58 @@ object Curation {
        |GROUP BY 1 ORDER BY 1""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q317_jaro_linkage" -> (q317JaroLinkage _),
-    "q318_entity_resolution" -> (q318EntityResolution _),
-    "q299_fellegi_sunter" -> (q299FellegiSunter _),
-    "q301_mis" -> (q301MaximalIndependentSet _),
-    "q303_greedy_coverage" -> (q303GreedyCoverage _),
-    "q283_influential_communities" -> (q283InfluentialCommunities _),
-    "q281_stream_outer_join" -> (q281StreamOuterJoin _),
-    "q279_pagerank_dangling" -> (q279PagerankDangling _),
-    "q270_personalized_pagerank" -> (q270PersonalizedPagerank _),
-    "q278_dbscan_lsh" -> (q278DbscanLsh _),
-    "q269_dbscan" -> (q269Dbscan _),
-    "q268_bfs_distance" -> (q268BfsDistance _),
-    "q280_sssp_weighted" -> (q280SsspWeighted _),
-    "q285_ttl_dedup" -> (q285TtlDedup _),
-    "q286_modularity" -> (q286Modularity _),
-    "q289_frequent_triples" -> (q289FrequentTriples _),
-    "q290_ktruss" -> (q290Ktruss _),
-    "q291_hits" -> (q291Hits _),
-    "q293_negative_sampling" -> (q293NegativeSampling _),
-    "q294_walk_corpus" -> (q294WalkCorpus _),
-    "q296_maximal_matching" -> (q296MaximalMatching _),
-    "q259_heaps_fit" -> (q259HeapsFit _),
-    "q260_clustering_coeff" -> (q260ClusteringCoeff _),
-    "q261_textrank" -> (q261Textrank _),
-    "q61_curation_pipeline" -> (q61Curation _),
-    "q62_pagerank" -> (q62Pagerank _),
-    "q221_label_prop" -> (q221LabelProp _),
-    "q223_adamic_adar" -> (q223AdamicAdar _),
-    "q232_kcore" -> (q232KCore _),
-    "q63_streaming_dedup" -> (q63StreamingDedup _),
-    "q64_profile" -> (q64Profile _),
-    "q65_repetition" -> (q65Repetition _),
-    "q66_bloom_join" -> (q66BloomJoin _),
-    "q67_ivfpq" -> (q67IvfPq _),
-    "q68_hybrid_rrf" -> (q68HybridRrf _),
-    "q69_tx_upsert" -> (q69TxUpsert _),
-    "q128_tx_compact" -> (q128TxCompact _),
-    "q152_tx_expire" -> (q152TxExpire _),
-    "q133_tx_evolve" -> (q133TxEvolve _),
-    "q134_stream_chunk_dedup" -> (q134StreamChunkDedup _),
-    "q70_tx_time_travel" -> (q70TxTimeTravel _),
-    "q71_unigram_logprob" -> (q71UnigramLogprob _),
-    "q72_vocab_report" -> (q72VocabReport _),
-    "q73_pii_scrub" -> (q73PiiScrub _),
-    "q74_boilerplate" -> (q74Boilerplate _),
-    "q75_semantic_dedup" -> (q75SemanticDedup _),
-    "q76_temperature_sample" -> (q76TemperatureSample _),
-    "q77_chunk_sliding" -> (q77ChunkSliding _),
-    "q78_stream_join" -> (q78StreamJoin _),
-    "q79_triangles" -> (q79Triangles _),
-    "q80_quantiles" -> (q80Quantiles _),
-    "q81_stream_ingest" -> (q81StreamIngest _),
-    "q82_tx_changes" -> (q82TxChanges _))
-
-  val oracleSql: Map[String, String] = Map(
-    "q299_fellegi_sunter" -> q299Sql,
-    "q317_jaro_linkage" -> q317Sql,
-    "q318_entity_resolution" -> q318Sql,
-    "q301_mis" -> q301Sql,
-    "q303_greedy_coverage" -> q303Sql,
-    "q283_influential_communities" -> q283Sql,
-    "q281_stream_outer_join" -> q281Sql,
-    "q279_pagerank_dangling" -> q279Sql,
-    "q270_personalized_pagerank" -> q270Sql,
-    "q278_dbscan_lsh" -> q278Sql,
-    "q269_dbscan" -> q269Sql,
-    "q268_bfs_distance" -> q268Sql,
-    "q280_sssp_weighted" -> q280Sql,
-    "q285_ttl_dedup" -> q285Sql,
-    "q286_modularity" -> q286Sql,
-    "q289_frequent_triples" -> q289Sql,
-    "q290_ktruss" -> q290Sql,
-    "q291_hits" -> q291Sql,
-    "q293_negative_sampling" -> q293Sql,
-    "q294_walk_corpus" -> q294Sql,
-    "q296_maximal_matching" -> q296Sql,
-    "q259_heaps_fit" -> q259Sql,
-    "q260_clustering_coeff" -> q260Sql,
-    "q261_textrank" -> q261Sql,
-    "q61_curation_pipeline" -> q61Sql,
-    "q62_pagerank" -> q62Sql,
-    "q221_label_prop" -> q221Sql,
-    "q223_adamic_adar" -> q223Sql,
-    "q232_kcore" -> q232Sql,
-    "q63_streaming_dedup" -> q63Sql,
-    "q64_profile" -> q64Sql,
-    "q65_repetition" -> q65Sql,
-    "q66_bloom_join" -> q66Sql,
-    "q67_ivfpq" -> q67Sql,
-    "q68_hybrid_rrf" -> q68Sql,
-    "q69_tx_upsert" -> q69Sql,
-    "q128_tx_compact" -> q128Sql,
-    "q152_tx_expire" -> q152Sql,
-    "q133_tx_evolve" -> q133Sql,
-    "q134_stream_chunk_dedup" -> q134Sql,
-    "q70_tx_time_travel" -> q70Sql,
-    "q71_unigram_logprob" -> q71Sql,
-    "q72_vocab_report" -> q72Sql,
-    "q73_pii_scrub" -> q73Sql,
-    "q74_boilerplate" -> q74Sql,
-    "q75_semantic_dedup" -> q75Sql,
-    "q76_temperature_sample" -> q76Sql,
-    "q77_chunk_sliding" -> q77Sql,
-    "q78_stream_join" -> q78Sql,
-    "q79_triangles" -> q79Sql,
-    "q80_quantiles" -> q80Sql,
-    "q81_stream_ingest" -> q81Sql,
-    "q82_tx_changes" -> q82Sql)
+  val declared: Seq[Query] = Seq(
+    Query("q317_jaro_linkage", q317JaroLinkage, q317Sql),
+    Query("q318_entity_resolution", q318EntityResolution, q318Sql),
+    Query("q299_fellegi_sunter", q299FellegiSunter, q299Sql),
+    Query("q301_mis", q301MaximalIndependentSet, q301Sql),
+    Query("q303_greedy_coverage", q303GreedyCoverage, q303Sql),
+    Query("q283_influential_communities", q283InfluentialCommunities, q283Sql),
+    Query("q281_stream_outer_join", q281StreamOuterJoin, q281Sql, Query.Streaming),
+    Query("q279_pagerank_dangling", q279PagerankDangling, q279Sql),
+    Query("q270_personalized_pagerank", q270PersonalizedPagerank, q270Sql),
+    Query("q278_dbscan_lsh", q278DbscanLsh, q278Sql),
+    Query("q269_dbscan", q269Dbscan, q269Sql),
+    Query("q268_bfs_distance", q268BfsDistance, q268Sql),
+    Query("q280_sssp_weighted", q280SsspWeighted, q280Sql),
+    Query("q285_ttl_dedup", q285TtlDedup, q285Sql, Query.Streaming),
+    Query("q286_modularity", q286Modularity, q286Sql),
+    Query("q289_frequent_triples", q289FrequentTriples, q289Sql),
+    Query("q290_ktruss", q290Ktruss, q290Sql),
+    Query("q291_hits", q291Hits, q291Sql),
+    Query("q293_negative_sampling", q293NegativeSampling, q293Sql),
+    Query("q294_walk_corpus", q294WalkCorpus, q294Sql),
+    Query("q296_maximal_matching", q296MaximalMatching, q296Sql),
+    Query("q259_heaps_fit", q259HeapsFit, q259Sql),
+    Query("q260_clustering_coeff", q260ClusteringCoeff, q260Sql),
+    Query("q261_textrank", q261Textrank, q261Sql),
+    Query("q61_curation_pipeline", q61Curation, q61Sql),
+    Query("q62_pagerank", q62Pagerank, q62Sql),
+    Query("q221_label_prop", q221LabelProp, q221Sql),
+    Query("q223_adamic_adar", q223AdamicAdar, q223Sql),
+    Query("q232_kcore", q232KCore, q232Sql),
+    Query("q63_streaming_dedup", q63StreamingDedup, q63Sql, Query.Streaming),
+    Query("q64_profile", q64Profile, q64Sql),
+    Query("q65_repetition", q65Repetition, q65Sql),
+    Query("q66_bloom_join", q66BloomJoin, q66Sql),
+    Query("q67_ivfpq", q67IvfPq, q67Sql),
+    Query("q68_hybrid_rrf", q68HybridRrf, q68Sql),
+    Query("q69_tx_upsert", q69TxUpsert, q69Sql, Query.Staged),
+    Query("q128_tx_compact", q128TxCompact, q128Sql, Query.Staged),
+    Query("q152_tx_expire", q152TxExpire, q152Sql, Query.Staged),
+    Query("q133_tx_evolve", q133TxEvolve, q133Sql, Query.Staged),
+    Query("q134_stream_chunk_dedup", q134StreamChunkDedup, q134Sql, Query.Streaming),
+    Query("q70_tx_time_travel", q70TxTimeTravel, q70Sql, Query.Staged),
+    Query("q71_unigram_logprob", q71UnigramLogprob, q71Sql),
+    Query("q72_vocab_report", q72VocabReport, q72Sql),
+    Query("q73_pii_scrub", q73PiiScrub, q73Sql),
+    Query("q74_boilerplate", q74Boilerplate, q74Sql),
+    Query("q75_semantic_dedup", q75SemanticDedup, q75Sql),
+    Query("q76_temperature_sample", q76TemperatureSample, q76Sql),
+    Query("q77_chunk_sliding", q77ChunkSliding, q77Sql),
+    Query("q78_stream_join", q78StreamJoin, q78Sql, Query.Streaming),
+    Query("q79_triangles", q79Triangles, q79Sql),
+    Query("q80_quantiles", q80Quantiles, q80Sql),
+    Query("q81_stream_ingest", q81StreamIngest, q81Sql, Query.Streaming),
+    Query("q82_tx_changes", q82TxChanges, q82Sql, Query.Staged))
 }

@@ -483,23 +483,13 @@ object Extended {
 
   // -------------------------------------------------------------- registry
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q51_asof_join" -> (q51AsofJoin _),
-    "q52_range_join" -> (q52RangeJoin _),
-    "q53_streaming_sessions" -> (q53StreamingSessions _),
-    "q54_heavy_hitters" -> (q54HeavyHitters _),
-    "q146_stream_topk" -> (q146StreamTopK _),
-    "q157_stream_mv" -> (q157StreamMv _),
-    "q172_stream_rate" -> (q172StreamRate _),
-    "q190_stream_late" -> (q190StreamLate _))
-
-  val oracleSql: Map[String, String] = Map(
-    "q51_asof_join" -> q51Sql,
-    "q52_range_join" -> q52Sql,
-    "q53_streaming_sessions" -> q53Sql,
-    "q54_heavy_hitters" -> q54Sql,
-    "q146_stream_topk" -> q146Sql,
-    "q157_stream_mv" -> q157Sql,
-    "q172_stream_rate" -> q172Sql,
-    "q190_stream_late" -> q190Sql)
+  val declared: Seq[Query] = Seq(
+    Query("q51_asof_join", q51AsofJoin, q51Sql),
+    Query("q52_range_join", q52RangeJoin, q52Sql),
+    Query("q53_streaming_sessions", q53StreamingSessions, q53Sql, Query.Streaming),
+    Query("q54_heavy_hitters", q54HeavyHitters, q54Sql),
+    Query("q146_stream_topk", q146StreamTopK, q146Sql, Query.Streaming),
+    Query("q157_stream_mv", q157StreamMv, q157Sql, Query.Staged),
+    Query("q172_stream_rate", q172StreamRate, q172Sql, Query.Streaming),
+    Query("q190_stream_late", q190StreamLate, q190Sql, Query.Streaming))
 }

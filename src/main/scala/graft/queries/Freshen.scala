@@ -321,23 +321,13 @@ object Freshen {
 
   // -------------------------------------------------------------- registry
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q31_freshen_stale" -> (q31FreshenStale _),
-    "q32_freshen_scored" -> (q32FreshenScored _),
-    "q33_freshen_merged" -> (q33FreshenMerged _),
-    "q34_streaming_freshen" -> (q34StreamingFreshen _),
-    "q37_version_window" -> (q37VersionWindow _),
-    "q44_streaming_window" -> (q44StreamingWindow _),
-    "q102_freshen_crosscol" -> (q102FreshenCrossColumn _),
-    "q131_shadow_score" -> (q131ShadowScore _))
-
-  val oracleSql: Map[String, String] = Map(
-    "q31_freshen_stale" -> q31Sql,
-    "q32_freshen_scored" -> q32Sql,
-    "q33_freshen_merged" -> q33Sql,
-    "q34_streaming_freshen" -> q34Sql,
-    "q37_version_window" -> q37Sql,
-    "q44_streaming_window" -> q44Sql,
-    "q102_freshen_crosscol" -> q102Sql,
-    "q131_shadow_score" -> q131Sql)
+  val declared: Seq[Query] = Seq(
+    Query("q31_freshen_stale", q31FreshenStale, q31Sql),
+    Query("q32_freshen_scored", q32FreshenScored, q32Sql),
+    Query("q33_freshen_merged", q33FreshenMerged, q33Sql),
+    Query("q34_streaming_freshen", q34StreamingFreshen, q34Sql, Query.Streaming),
+    Query("q37_version_window", q37VersionWindow, q37Sql),
+    Query("q44_streaming_window", q44StreamingWindow, q44Sql, Query.Streaming),
+    Query("q102_freshen_crosscol", q102FreshenCrossColumn, q102Sql),
+    Query("q131_shadow_score", q131ShadowScore, q131Sql))
 }

@@ -2508,119 +2508,61 @@ object LlmOps {
 
   // -------------------------------------------------------------- registry
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q319_conformal_coverage" -> (q319ConformalCoverage _),
-    "q320_wasserstein_drift" -> (q320WassersteinDrift _),
-    "q282_url_canonical" -> (q282UrlCanonical _),
-    "q258_readability" -> (q258Readability _),
-    "q18_exact_dedup" -> (q18ExactDedup _),
-    "q19_ngram_jaccard" -> (q19NgramJaccard _),
-    "q20_minhash" -> (q20Minhash _),
-    "q21_lsh_candidates" -> (q21LshCandidates _),
-    "q22_simhash" -> (q22Simhash _),
-    "q23_text_stats" -> (q23TextStats _),
-    "q24_lang_id" -> (q24LangId _),
-    "q25_token_counts" -> (q25TokenCounts _),
-    "q26_fingerprint" -> (q26Fingerprint _),
-    "q27_cosine_topk" -> (q27CosineTopK _),
-    "q237_matryoshka_agree" -> (q237MatryoshkaAgree _),
-    "q28_media_frames" -> (q28MediaFrames _),
-    "q29_cosine_lsh" -> (q29CosineLsh _),
-    "q30_media_features" -> (q30MediaFeatures _),
-    "q35_dup_clusters" -> (q35DupClusters _),
-    "q43_cosine_ivf" -> (q43CosineIvf _),
-    "q46_cosine_pairs" -> (q46CosinePairs _),
-    "q50_winnow" -> (q50Winnow _),
-    "q103_int8_ann" -> (q103Int8Ann _),
-    "q105_hamming_ann" -> (q105HammingAnn _),
-    "q116_knn_label" -> (q116KnnLabel _),
-    "q130_hard_negatives" -> (q130HardNegatives _),
-    "q118_incremental_dedup" -> (q118IncrementalDedup _),
-    "q119_cosine_pairs_lsh" -> (q119CosinePairsLsh _),
-    "q125_jl_project" -> (q125JlProject _),
-    "q126_source_dup_matrix" -> (q126SourceDupMatrix _),
-    "q135_containment_pairs" -> (q135ContainmentPairs _),
-    "q136_fuzzy_join" -> (q136FuzzyJoin _),
-    "q137_novelty_curve" -> (q137NoveltyCurve _),
-    "q140_kmeans_int" -> (q140KmeansInt _),
-    "q141_semdedup" -> (q141SemDedup _),
-    "q218_residual_vq" -> (q218ResidualVq _),
-    "q142_ann_recall" -> (q142AnnRecall _),
-    "q156_silhouette" -> (q156Silhouette _),
-    "q160_quality_percentile" -> (q160QualityPercentile _),
-    "q163_embed_drift" -> (q163EmbedDrift _),
-    "q164_ann_mrr" -> (q164AnnMrr _),
-    "q165_media_phash" -> (q165MediaPhash _),
-    "q167_minhash_eval" -> (q167MinhashEval _),
-    "q287_weighted_jaccard" -> (q287WeightedJaccard _),
-    "q288_snm_dedup" -> (q288SnmDedup _),
-    "q175_blocking_eval" -> (q175BlockingEval _),
-    "q180_media_energy" -> (q180MediaEnergy _),
-    "q182_langid_eval" -> (q182LangidEval _),
-    "q186_embed_health" -> (q186EmbedHealth _),
-    "q199_degree_histogram" -> (q199DegreeHistogram _),
-    "q200_scorecard" -> (q200Scorecard _),
-    "q143_classifier_score" -> (q143ClassifierScore _),
-    "q145_mmr_select" -> (q145MmrSelect _),
-    "q149_golden_record" -> (q149GoldenRecord _),
-    "q150_contrastive_pairs" -> (q150ContrastivePairs _),
-    "q151_multiprobe_lsh" -> (q151MultiProbeLsh _))
-
-  val oracleSql: Map[String, String] = Map(
-    "q319_conformal_coverage" -> q319Sql,
-    "q320_wasserstein_drift" -> q320Sql,
-    "q282_url_canonical" -> q282Sql,
-    "q258_readability" -> q258Sql,
-    "q18_exact_dedup" -> q18Sql,
-    "q19_ngram_jaccard" -> q19Sql,
-    "q20_minhash" -> q20Sql,
-    "q21_lsh_candidates" -> q21Sql,
-    "q22_simhash" -> q22Sql,
-    "q23_text_stats" -> q23Sql,
-    "q24_lang_id" -> q24Sql,
-    "q25_token_counts" -> q25Sql,
-    "q26_fingerprint" -> q26Sql,
-    "q27_cosine_topk" -> q27Sql,
-    "q237_matryoshka_agree" -> q237Sql,
-    "q28_media_frames" -> q28Sql,
-    "q29_cosine_lsh" -> q29Sql,
-    "q30_media_features" -> q30Sql,
-    "q43_cosine_ivf" -> q43Sql,
-    "q35_dup_clusters" -> q35Sql,
-    "q46_cosine_pairs" -> q46Sql,
-    "q50_winnow" -> q50Sql,
-    "q103_int8_ann" -> q103Sql,
-    "q105_hamming_ann" -> q105Sql,
-    "q116_knn_label" -> q116Sql,
-    "q130_hard_negatives" -> q130Sql,
-    "q118_incremental_dedup" -> q118Sql,
-    "q119_cosine_pairs_lsh" -> q119Sql,
-    "q125_jl_project" -> q125Sql,
-    "q126_source_dup_matrix" -> q126Sql,
-    "q135_containment_pairs" -> q135Sql,
-    "q136_fuzzy_join" -> q136Sql,
-    "q137_novelty_curve" -> q137Sql,
-    "q140_kmeans_int" -> q140Sql,
-    "q141_semdedup" -> q141Sql,
-    "q218_residual_vq" -> q218Sql,
-    "q142_ann_recall" -> q142Sql,
-    "q156_silhouette" -> q156Sql,
-    "q160_quality_percentile" -> q160Sql,
-    "q163_embed_drift" -> q163Sql,
-    "q164_ann_mrr" -> q164Sql,
-    "q165_media_phash" -> q165Sql,
-    "q167_minhash_eval" -> q167Sql,
-    "q287_weighted_jaccard" -> q287Sql,
-    "q288_snm_dedup" -> q288Sql,
-    "q175_blocking_eval" -> q175Sql,
-    "q180_media_energy" -> q180Sql,
-    "q182_langid_eval" -> q182Sql,
-    "q186_embed_health" -> q186Sql,
-    "q199_degree_histogram" -> q199Sql,
-    "q200_scorecard" -> q200Sql,
-    "q143_classifier_score" -> q143Sql,
-    "q145_mmr_select" -> q145Sql,
-    "q149_golden_record" -> q149Sql,
-    "q150_contrastive_pairs" -> q150Sql,
-    "q151_multiprobe_lsh" -> q151Sql)
+  val declared: Seq[Query] = Seq(
+    Query("q319_conformal_coverage", q319ConformalCoverage, q319Sql),
+    Query("q320_wasserstein_drift", q320WassersteinDrift, q320Sql),
+    Query("q282_url_canonical", q282UrlCanonical, q282Sql),
+    Query("q258_readability", q258Readability, q258Sql),
+    Query("q18_exact_dedup", q18ExactDedup, q18Sql),
+    Query("q19_ngram_jaccard", q19NgramJaccard, q19Sql),
+    Query("q20_minhash", q20Minhash, q20Sql),
+    Query("q21_lsh_candidates", q21LshCandidates, q21Sql),
+    Query("q22_simhash", q22Simhash, q22Sql),
+    Query("q23_text_stats", q23TextStats, q23Sql),
+    Query("q24_lang_id", q24LangId, q24Sql),
+    Query("q25_token_counts", q25TokenCounts, q25Sql),
+    Query("q26_fingerprint", q26Fingerprint, q26Sql),
+    Query("q27_cosine_topk", q27CosineTopK, q27Sql),
+    Query("q237_matryoshka_agree", q237MatryoshkaAgree, q237Sql),
+    Query("q28_media_frames", q28MediaFrames, q28Sql),
+    Query("q29_cosine_lsh", q29CosineLsh, q29Sql),
+    Query("q30_media_features", q30MediaFeatures, q30Sql),
+    Query("q35_dup_clusters", q35DupClusters, q35Sql),
+    Query("q43_cosine_ivf", q43CosineIvf, q43Sql),
+    Query("q46_cosine_pairs", q46CosinePairs, q46Sql),
+    Query("q50_winnow", q50Winnow, q50Sql),
+    Query("q103_int8_ann", q103Int8Ann, q103Sql),
+    Query("q105_hamming_ann", q105HammingAnn, q105Sql),
+    Query("q116_knn_label", q116KnnLabel, q116Sql),
+    Query("q130_hard_negatives", q130HardNegatives, q130Sql),
+    Query("q118_incremental_dedup", q118IncrementalDedup, q118Sql),
+    Query("q119_cosine_pairs_lsh", q119CosinePairsLsh, q119Sql),
+    Query("q125_jl_project", q125JlProject, q125Sql),
+    Query("q126_source_dup_matrix", q126SourceDupMatrix, q126Sql),
+    Query("q135_containment_pairs", q135ContainmentPairs, q135Sql),
+    Query("q136_fuzzy_join", q136FuzzyJoin, q136Sql),
+    Query("q137_novelty_curve", q137NoveltyCurve, q137Sql),
+    Query("q140_kmeans_int", q140KmeansInt, q140Sql),
+    Query("q141_semdedup", q141SemDedup, q141Sql),
+    Query("q218_residual_vq", q218ResidualVq, q218Sql),
+    Query("q142_ann_recall", q142AnnRecall, q142Sql),
+    Query("q156_silhouette", q156Silhouette, q156Sql),
+    Query("q160_quality_percentile", q160QualityPercentile, q160Sql),
+    Query("q163_embed_drift", q163EmbedDrift, q163Sql),
+    Query("q164_ann_mrr", q164AnnMrr, q164Sql),
+    Query("q165_media_phash", q165MediaPhash, q165Sql),
+    Query("q167_minhash_eval", q167MinhashEval, q167Sql),
+    Query("q287_weighted_jaccard", q287WeightedJaccard, q287Sql),
+    Query("q288_snm_dedup", q288SnmDedup, q288Sql),
+    Query("q175_blocking_eval", q175BlockingEval, q175Sql),
+    Query("q180_media_energy", q180MediaEnergy, q180Sql),
+    Query("q182_langid_eval", q182LangidEval, q182Sql),
+    Query("q186_embed_health", q186EmbedHealth, q186Sql),
+    Query("q199_degree_histogram", q199DegreeHistogram, q199Sql),
+    Query("q200_scorecard", q200Scorecard, q200Sql),
+    Query("q143_classifier_score", q143ClassifierScore, q143Sql),
+    Query("q145_mmr_select", q145MmrSelect, q145Sql),
+    Query("q149_golden_record", q149GoldenRecord, q149Sql),
+    Query("q150_contrastive_pairs", q150ContrastivePairs, q150Sql),
+    Query("q151_multiprobe_lsh", q151MultiProbeLsh, q151Sql))
 }

@@ -278,25 +278,14 @@ object Pipeline {
       |SELECT qid AS id, "rank", cid AS neighbor_id, n_shared_terms, cosine
       |FROM r WHERE "rank" <= 5 ORDER BY id, "rank"""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q114_sparse_knn" -> (q114SparseKnn _),
-    "q55_tfidf" -> (q55Tfidf _),
-    "q56_quality_rules" -> (q56QualityRules _),
-    "q57_stratified_sample" -> (q57StratifiedSample _),
-    "q58_pack_sequences" -> (q58PackSequences _),
-    "q59_bm25" -> (q59Bm25 _),
-    "q60_decontaminate" -> (q60Decontaminate _),
-    "q170_dirichlet_ql" -> (q170DirichletQl _),
-    "q187_ndcg" -> (q187Ndcg _))
-
-  val oracleSql: Map[String, String] = Map(
-    "q114_sparse_knn" -> q114Sql,
-    "q55_tfidf" -> q55Sql,
-    "q56_quality_rules" -> q56Sql,
-    "q57_stratified_sample" -> q57Sql,
-    "q58_pack_sequences" -> q58Sql,
-    "q59_bm25" -> q59Sql,
-    "q60_decontaminate" -> q60Sql,
-    "q170_dirichlet_ql" -> q170Sql,
-    "q187_ndcg" -> q187Sql)
+  val declared: Seq[Query] = Seq(
+    Query("q114_sparse_knn", q114SparseKnn, q114Sql),
+    Query("q55_tfidf", q55Tfidf, q55Sql),
+    Query("q56_quality_rules", q56QualityRules, q56Sql),
+    Query("q57_stratified_sample", q57StratifiedSample, q57Sql),
+    Query("q58_pack_sequences", q58PackSequences, q58Sql),
+    Query("q59_bm25", q59Bm25, q59Sql),
+    Query("q60_decontaminate", q60Decontaminate, q60Sql),
+    Query("q170_dirichlet_ql", q170DirichletQl, q170Sql),
+    Query("q187_ndcg", q187Ndcg, q187Sql))
 }

@@ -1691,109 +1691,56 @@ object Relational {
       |GROUP BY 1
       |ORDER BY ship_mode""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q276_important_stock" -> (q276ImportantStock _),
-    "q277_shipmode_priority" -> (q277ShipmodePriority _),
-    "q274_window_suite" -> (q274WindowSuite _),
-    "q275_wow_contribution" -> (q275WowContribution _),
-    "q271_forecast_revenue" -> (q271ForecastRevenue _),
-    "q272_product_profit" -> (q272ProductProfit _),
-    "q273_surplus_suppliers" -> (q273SurplusSuppliers _),
-    "q264_part_supplier_dist" -> (q264PartSupplierDist _),
-    "q265_priority_exists" -> (q265PriorityExists _),
-    "q245_shipping_priority" -> (q245ShippingPriority _),
-    "q246_volume_shipping" -> (q246VolumeShipping _),
-    "q247_returned_items" -> (q247ReturnedItems _),
-    "q248_small_qty_revenue" -> (q248SmallQtyRevenue _),
-    "q249_promo_share" -> (q249PromoShare _),
-    "q250_or_branch_revenue" -> (q250OrBranchRevenue _),
-    "q224_regional_revenue" -> (q224RegionalRevenue _),
-    "q225_market_share" -> (q225MarketShare _),
-    "q226_custdist" -> (q226Custdist _),
-    "q239_top_supplier_quarter" -> (q239TopSupplierQuarter _),
-    "q240_cheapest_offer" -> (q240CheapestOffer _),
-    "q241_grouping_sets" -> (q241GroupingSets _),
-    "q227_dormant_rich" -> (q227DormantRich _),
-    "q228_large_orders" -> (q228LargeOrders _),
-    "q229_blocking_supplier" -> (q229BlockingSupplier _),
-    "q01_pricing_summary" -> (q01PricingSummary _),
-    "q02_filter_predicates" -> (q02FilterPredicates _),
-    "q03_broadcast_join" -> (q03BroadcastJoin _),
-    "q04_shuffle_join" -> (q04ShuffleJoin _),
-    "q05_semi_join" -> (q05SemiJoin _),
-    "q06_anti_join" -> (q06AntiJoin _),
-    "q07_distinct" -> (q07Distinct _),
-    "q08_window_top_per_key" -> (q08WindowTopPerKey _),
-    "q09_window_lag_running" -> (q09WindowLagRunning _),
-    "q10_union" -> (q10Union _),
-    "q11_intersect_except" -> (q11IntersectExcept _),
-    "q12_string_funcs" -> (q12StringFuncs _),
-    "q13_date_funcs" -> (q13DateFuncs _),
-    "q14_math_case" -> (q14MathCase _),
-    "q15_array_funcs" -> (q15ArrayFuncs _),
-    "q16_json_funcs" -> (q16JsonFuncs _),
-    "q17_max_by_having" -> (q17MaxByHaving _),
-    "q36_rollup_conditional" -> (q36RollupConditional _),
-    "q38_edit_distance" -> (q38EditDistance _),
-    "q39_time_window" -> (q39TimeWindow _),
-    "q40_pivot" -> (q40Pivot _),
-    "q41_string_funcs2" -> (q41StringFuncs2 _),
-    "q42_date_funcs2" -> (q42DateFuncs2 _),
-    "q45_bucketed_join" -> (q45BucketedJoin _),
-    "q47_salted_join" -> (q47SaltedJoin _),
-    "q48_cube" -> (q48Cube _),
-    "q49_sql_exists" -> (q49SqlExists _))
-
-  val oracleSql: Map[String, String] = Map(
-    "q276_important_stock" -> q276Sql,
-    "q277_shipmode_priority" -> q277Sql,
-    "q274_window_suite" -> q274Sql,
-    "q275_wow_contribution" -> q275Sql,
-    "q271_forecast_revenue" -> q271Sql,
-    "q272_product_profit" -> q272Sql,
-    "q273_surplus_suppliers" -> q273Sql,
-    "q264_part_supplier_dist" -> q264Sql,
-    "q265_priority_exists" -> q265Sql,
-    "q245_shipping_priority" -> q245Sql,
-    "q246_volume_shipping" -> q246Sql,
-    "q247_returned_items" -> q247Sql,
-    "q248_small_qty_revenue" -> q248Sql,
-    "q249_promo_share" -> q249Sql,
-    "q250_or_branch_revenue" -> q250Sql,
-    "q224_regional_revenue" -> q224Sql,
-    "q225_market_share" -> q225Sql,
-    "q226_custdist" -> q226Sql,
-    "q239_top_supplier_quarter" -> q239Sql,
-    "q240_cheapest_offer" -> q240Sql,
-    "q241_grouping_sets" -> q241Sql,
-    "q227_dormant_rich" -> q227Sql,
-    "q228_large_orders" -> q228Sql,
-    "q229_blocking_supplier" -> q229Sql,
-    "q01_pricing_summary" -> q01Sql,
-    "q02_filter_predicates" -> q02Sql,
-    "q03_broadcast_join" -> q03Sql,
-    "q04_shuffle_join" -> q04Sql,
-    "q05_semi_join" -> q05Sql,
-    "q06_anti_join" -> q06Sql,
-    "q07_distinct" -> q07Sql,
-    "q08_window_top_per_key" -> q08Sql,
-    "q09_window_lag_running" -> q09Sql,
-    "q10_union" -> q10Sql,
-    "q11_intersect_except" -> q11Sql,
-    "q12_string_funcs" -> q12Sql,
-    "q13_date_funcs" -> q13Sql,
-    "q14_math_case" -> q14Sql,
-    "q15_array_funcs" -> q15Sql,
-    "q16_json_funcs" -> q16Sql,
-    "q17_max_by_having" -> q17Sql,
-    "q36_rollup_conditional" -> q36Sql,
-    "q38_edit_distance" -> q38Sql,
-    "q39_time_window" -> q39Sql,
-    "q40_pivot" -> q40Sql,
-    "q41_string_funcs2" -> q41Sql,
-    "q42_date_funcs2" -> q42Sql,
-    "q45_bucketed_join" -> q45Sql,
-    "q47_salted_join" -> q47Sql,
-    "q48_cube" -> q48Sql,
-    "q49_sql_exists" -> q49Sql)
+  val declared: Seq[Query] = Seq(
+    Query("q276_important_stock", q276ImportantStock, q276Sql),
+    Query("q277_shipmode_priority", q277ShipmodePriority, q277Sql),
+    Query("q274_window_suite", q274WindowSuite, q274Sql),
+    Query("q275_wow_contribution", q275WowContribution, q275Sql),
+    Query("q271_forecast_revenue", q271ForecastRevenue, q271Sql),
+    Query("q272_product_profit", q272ProductProfit, q272Sql),
+    Query("q273_surplus_suppliers", q273SurplusSuppliers, q273Sql),
+    Query("q264_part_supplier_dist", q264PartSupplierDist, q264Sql),
+    Query("q265_priority_exists", q265PriorityExists, q265Sql),
+    Query("q245_shipping_priority", q245ShippingPriority, q245Sql),
+    Query("q246_volume_shipping", q246VolumeShipping, q246Sql),
+    Query("q247_returned_items", q247ReturnedItems, q247Sql),
+    Query("q248_small_qty_revenue", q248SmallQtyRevenue, q248Sql),
+    Query("q249_promo_share", q249PromoShare, q249Sql),
+    Query("q250_or_branch_revenue", q250OrBranchRevenue, q250Sql),
+    Query("q224_regional_revenue", q224RegionalRevenue, q224Sql),
+    Query("q225_market_share", q225MarketShare, q225Sql),
+    Query("q226_custdist", q226Custdist, q226Sql),
+    Query("q239_top_supplier_quarter", q239TopSupplierQuarter, q239Sql),
+    Query("q240_cheapest_offer", q240CheapestOffer, q240Sql),
+    Query("q241_grouping_sets", q241GroupingSets, q241Sql),
+    Query("q227_dormant_rich", q227DormantRich, q227Sql),
+    Query("q228_large_orders", q228LargeOrders, q228Sql),
+    Query("q229_blocking_supplier", q229BlockingSupplier, q229Sql),
+    Query("q01_pricing_summary", q01PricingSummary, q01Sql),
+    Query("q02_filter_predicates", q02FilterPredicates, q02Sql),
+    Query("q03_broadcast_join", q03BroadcastJoin, q03Sql),
+    Query("q04_shuffle_join", q04ShuffleJoin, q04Sql),
+    Query("q05_semi_join", q05SemiJoin, q05Sql),
+    Query("q06_anti_join", q06AntiJoin, q06Sql),
+    Query("q07_distinct", q07Distinct, q07Sql),
+    Query("q08_window_top_per_key", q08WindowTopPerKey, q08Sql),
+    Query("q09_window_lag_running", q09WindowLagRunning, q09Sql),
+    Query("q10_union", q10Union, q10Sql),
+    Query("q11_intersect_except", q11IntersectExcept, q11Sql),
+    Query("q12_string_funcs", q12StringFuncs, q12Sql),
+    Query("q13_date_funcs", q13DateFuncs, q13Sql),
+    Query("q14_math_case", q14MathCase, q14Sql),
+    Query("q15_array_funcs", q15ArrayFuncs, q15Sql),
+    Query("q16_json_funcs", q16JsonFuncs, q16Sql),
+    Query("q17_max_by_having", q17MaxByHaving, q17Sql),
+    Query("q36_rollup_conditional", q36RollupConditional, q36Sql),
+    Query("q38_edit_distance", q38EditDistance, q38Sql),
+    Query("q39_time_window", q39TimeWindow, q39Sql),
+    Query("q40_pivot", q40Pivot, q40Sql),
+    Query("q41_string_funcs2", q41StringFuncs2, q41Sql),
+    Query("q42_date_funcs2", q42DateFuncs2, q42Sql),
+    Query("q45_bucketed_join", q45BucketedJoin, q45Sql, Query.Staged),
+    Query("q47_salted_join", q47SaltedJoin, q47Sql),
+    Query("q48_cube", q48Cube, q48Sql),
+    Query("q49_sql_exists", q49SqlExists, q49Sql))
 }

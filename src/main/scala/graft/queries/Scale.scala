@@ -3174,143 +3174,73 @@ object Scale {
       |  CAST(exact_intersection * 1000000 // exact_union AS BIGINT) AS exact_jaccard_ppm
       |FROM est""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q302_kmv_setops" -> (q302KmvSetOps _),
-    "q304_timer_sessions" -> (q304TimerSessions _),
-    "q306_type_counts" -> (q306TypeCounts _),
-    "q307_recent_purchases" -> (q307RecentPurchases _),
-    "q83_hash_split" -> (q83HashSplit _),
-    "q104_leakage_safe_split" -> (q104LeakageSafeSplit _),
-    "q106_dsir_weights" -> (q106DsirWeights _),
-    "q107_perplexity_tiers" -> (q107PerplexityTiers _),
-    "q108_pmi_phrases" -> (q108PmiPhrases _),
-    "q109_mixture_schedule" -> (q109MixtureSchedule _),
-    "q110_bigram_logprob" -> (q110BigramLogprob _),
-    "q111_containment" -> (q111Containment _),
-    "q112_stream_decontam" -> (q112StreamDecontam _),
-    "q113_source_caps" -> (q113SourceCaps _),
-    "q115_epoch_shuffle" -> (q115EpochShuffle _),
-    "q117_stream_quota" -> (q117StreamQuota _),
-    "q120_self_repeats" -> (q120SelfRepeats _),
-    "q129_chunk_dedup" -> (q129ChunkDedup _),
-    "q204_substring_dedup" -> (q204SubstringDedup _),
-    "q209_substr_anchored" -> (q209SubstrAnchored _),
-    "q213_kneser_ney" -> (q213KneserNey _),
-    "q214_item_cooccur" -> (q214ItemCooccur _),
-    "q215_rake_keywords" -> (q215RakeKeywords _),
-    "q217_stream_psi" -> (q217StreamPsi _),
-    "q233_stream_cusum" -> (q233StreamCusum _),
-    "q205_top_boilerplate" -> (q205TopBoilerplate _),
-    "q206_fracminhash" -> (q206FracMinHash _),
-    "q242_kmv_distinct" -> (q242KmvDistinct _),
-    "q243_countmin" -> (q243CountMin _),
-    "q207_stream_substr" -> (q207StreamSubstr _),
-    "q208_substr_keepfirst" -> (q208SubstrKeepFirst _),
-    "q210_stream_substr_late" -> (q210StreamSubstrLate _),
-    "q132_cluster_canonical" -> (q132ClusterCanonical _),
-    "q121_bpe_merges" -> (q121BpeMerges _),
-    "q122_bpe_vocab" -> (q122BpeVocab _),
-    "q123_bpe_fertility" -> (q123BpeFertility _),
-    "q124_source_drift" -> (q124SourceDrift _),
-    "q127_stream_ann" -> (q127StreamAnn _),
-    "q84_token_budget" -> (q84TokenBudget _),
-    "q85_dup_spans" -> (q85DupSpans _),
-    "q86_hll_sketch" -> (q86HllSketch _),
-    "q87_zorder" -> (q87Zorder _),
-    "q88_funnel" -> (q88Funnel _),
-    "q89_retention" -> (q89Retention _),
-    "q90_zonemap_read" -> (q90ZonemapRead _),
-    "q91_stream_hll" -> (q91StreamHll _),
-    "q266_stream_histq" -> (q266StreamHistQuantiles _),
-    "q284_stream_session_window" -> (q284StreamSessionWindow _),
-    "q295_running_balance" -> (q295RunningBalance _),
-    "q92_incremental_agg" -> (q92IncrementalAgg _),
-    "q93_index_lookup" -> (q93IndexLookup _),
-    "q94_tx_delete" -> (q94TxDelete _),
-    "q95_stream_funnel" -> (q95StreamFunnel _),
-    "q96_transitions" -> (q96Transitions _),
-    "q97_rfm" -> (q97Rfm _),
-    "q138_scd2_intervals" -> (q138Scd2 _),
-    "q139_stream_scd2" -> (q139StreamScd2 _),
-    "q98_media_dup" -> (q98MediaDup _),
-    "q144_media_pair_dup" -> (q144MediaPairDup _),
-    "q147_cdc_dedup" -> (q147CdcDedup _),
-    "q148_leakage_audit" -> (q148LeakageAudit _),
-    "q158_group_kfold" -> (q158GroupKfold _),
-    "q159_decay_value" -> (q159DecayValue _),
-    "q161_rolling_window" -> (q161RollingWindow _),
-    "q162_value_drift" -> (q162ValueDrift _),
-    "q99_expectations" -> (q99Expectations _),
-    "q100_train_manifest" -> (q100TrainManifest _),
-    "q101_class_centroids" -> (q101ClassCentroids _))
-
-  val oracleSql: Map[String, String] = Map(
-    "q302_kmv_setops" -> q302Sql,
-    "q304_timer_sessions" -> q304Sql,
-    "q306_type_counts" -> q306Sql,
-    "q307_recent_purchases" -> q307Sql,
-    "q83_hash_split" -> q83Sql,
-    "q104_leakage_safe_split" -> q104Sql,
-    "q106_dsir_weights" -> q106Sql,
-    "q107_perplexity_tiers" -> q107Sql,
-    "q108_pmi_phrases" -> q108Sql,
-    "q109_mixture_schedule" -> q109Sql,
-    "q110_bigram_logprob" -> q110Sql,
-    "q111_containment" -> q111Sql,
-    "q112_stream_decontam" -> q112Sql,
-    "q113_source_caps" -> q113Sql,
-    "q115_epoch_shuffle" -> q115Sql,
-    "q117_stream_quota" -> q117Sql,
-    "q120_self_repeats" -> q120Sql,
-    "q129_chunk_dedup" -> q129Sql,
-    "q204_substring_dedup" -> q204Sql,
-    "q209_substr_anchored" -> q209Sql,
-    "q213_kneser_ney" -> q213Sql,
-    "q214_item_cooccur" -> q214Sql,
-    "q215_rake_keywords" -> q215Sql,
-    "q217_stream_psi" -> q217Sql,
-    "q233_stream_cusum" -> q233Sql,
-    "q205_top_boilerplate" -> q205Sql,
-    "q206_fracminhash" -> q206Sql,
-    "q242_kmv_distinct" -> q242Sql,
-    "q243_countmin" -> q243Sql,
-    "q207_stream_substr" -> q207Sql,
-    "q208_substr_keepfirst" -> q208Sql,
-    "q210_stream_substr_late" -> q210Sql,
-    "q132_cluster_canonical" -> q132Sql,
-    "q121_bpe_merges" -> q121Sql,
-    "q122_bpe_vocab" -> q122Sql,
-    "q123_bpe_fertility" -> q123Sql,
-    "q124_source_drift" -> q124Sql,
-    "q127_stream_ann" -> q127Sql,
-    "q84_token_budget" -> q84Sql,
-    "q85_dup_spans" -> q85Sql,
-    "q86_hll_sketch" -> q86Sql,
-    "q87_zorder" -> q87Sql,
-    "q88_funnel" -> q88Sql,
-    "q89_retention" -> q89Sql,
-    "q90_zonemap_read" -> q90Sql,
-    "q91_stream_hll" -> q91Sql,
-    "q266_stream_histq" -> q266Sql,
-    "q284_stream_session_window" -> q284Sql,
-    "q295_running_balance" -> q295Sql,
-    "q92_incremental_agg" -> q92Sql,
-    "q93_index_lookup" -> q93Sql,
-    "q94_tx_delete" -> q94Sql,
-    "q95_stream_funnel" -> q88Sql,
-    "q96_transitions" -> q96Sql,
-    "q97_rfm" -> q97Sql,
-    "q138_scd2_intervals" -> q138Sql,
-    "q139_stream_scd2" -> q138Sql,
-    "q98_media_dup" -> q98Sql,
-    "q144_media_pair_dup" -> q144Sql,
-    "q147_cdc_dedup" -> q147Sql,
-    "q148_leakage_audit" -> q148Sql,
-    "q158_group_kfold" -> q158Sql,
-    "q159_decay_value" -> q159Sql,
-    "q161_rolling_window" -> q161Sql,
-    "q162_value_drift" -> q162Sql,
-    "q99_expectations" -> q99Sql,
-    "q100_train_manifest" -> q100Sql,
-    "q101_class_centroids" -> q101Sql)
+  val declared: Seq[Query] = Seq(
+    Query("q302_kmv_setops", q302KmvSetOps, q302Sql),
+    Query("q304_timer_sessions", q304TimerSessions, q304Sql, Query.Streaming),
+    Query("q306_type_counts", q306TypeCounts, q306Sql, Query.Streaming),
+    Query("q307_recent_purchases", q307RecentPurchases, q307Sql, Query.Streaming),
+    Query("q83_hash_split", q83HashSplit, q83Sql),
+    Query("q104_leakage_safe_split", q104LeakageSafeSplit, q104Sql),
+    Query("q106_dsir_weights", q106DsirWeights, q106Sql),
+    Query("q107_perplexity_tiers", q107PerplexityTiers, q107Sql),
+    Query("q108_pmi_phrases", q108PmiPhrases, q108Sql),
+    Query("q109_mixture_schedule", q109MixtureSchedule, q109Sql),
+    Query("q110_bigram_logprob", q110BigramLogprob, q110Sql),
+    Query("q111_containment", q111Containment, q111Sql),
+    Query("q112_stream_decontam", q112StreamDecontam, q112Sql, Query.Streaming),
+    Query("q113_source_caps", q113SourceCaps, q113Sql),
+    Query("q115_epoch_shuffle", q115EpochShuffle, q115Sql),
+    Query("q117_stream_quota", q117StreamQuota, q117Sql, Query.Streaming),
+    Query("q120_self_repeats", q120SelfRepeats, q120Sql),
+    Query("q129_chunk_dedup", q129ChunkDedup, q129Sql),
+    Query("q204_substring_dedup", q204SubstringDedup, q204Sql),
+    Query("q209_substr_anchored", q209SubstrAnchored, q209Sql),
+    Query("q213_kneser_ney", q213KneserNey, q213Sql),
+    Query("q214_item_cooccur", q214ItemCooccur, q214Sql),
+    Query("q215_rake_keywords", q215RakeKeywords, q215Sql),
+    Query("q217_stream_psi", q217StreamPsi, q217Sql, Query.Streaming),
+    Query("q233_stream_cusum", q233StreamCusum, q233Sql, Query.Streaming),
+    Query("q205_top_boilerplate", q205TopBoilerplate, q205Sql),
+    Query("q206_fracminhash", q206FracMinHash, q206Sql),
+    Query("q242_kmv_distinct", q242KmvDistinct, q242Sql),
+    Query("q243_countmin", q243CountMin, q243Sql),
+    Query("q207_stream_substr", q207StreamSubstr, q207Sql, Query.Streaming),
+    Query("q208_substr_keepfirst", q208SubstrKeepFirst, q208Sql),
+    Query("q210_stream_substr_late", q210StreamSubstrLate, q210Sql, Query.Streaming),
+    Query("q132_cluster_canonical", q132ClusterCanonical, q132Sql),
+    Query("q121_bpe_merges", q121BpeMerges, q121Sql),
+    Query("q122_bpe_vocab", q122BpeVocab, q122Sql),
+    Query("q123_bpe_fertility", q123BpeFertility, q123Sql),
+    Query("q124_source_drift", q124SourceDrift, q124Sql),
+    Query("q127_stream_ann", q127StreamAnn, q127Sql, Query.Streaming),
+    Query("q84_token_budget", q84TokenBudget, q84Sql),
+    Query("q85_dup_spans", q85DupSpans, q85Sql),
+    Query("q86_hll_sketch", q86HllSketch, q86Sql),
+    Query("q87_zorder", q87Zorder, q87Sql),
+    Query("q88_funnel", q88Funnel, q88Sql),
+    Query("q89_retention", q89Retention, q89Sql),
+    Query("q90_zonemap_read", q90ZonemapRead, q90Sql, Query.Staged),
+    Query("q91_stream_hll", q91StreamHll, q91Sql, Query.Streaming),
+    Query("q266_stream_histq", q266StreamHistQuantiles, q266Sql, Query.Streaming),
+    Query("q284_stream_session_window", q284StreamSessionWindow, q284Sql, Query.Streaming),
+    Query("q295_running_balance", q295RunningBalance, q295Sql, Query.Streaming),
+    Query("q92_incremental_agg", q92IncrementalAgg, q92Sql, Query.Staged),
+    Query("q93_index_lookup", q93IndexLookup, q93Sql, Query.Staged),
+    Query("q94_tx_delete", q94TxDelete, q94Sql, Query.Staged),
+    Query("q95_stream_funnel", q95StreamFunnel, q88Sql, Query.Streaming),
+    Query("q96_transitions", q96Transitions, q96Sql),
+    Query("q97_rfm", q97Rfm, q97Sql),
+    Query("q138_scd2_intervals", q138Scd2, q138Sql),
+    Query("q139_stream_scd2", q139StreamScd2, q138Sql, Query.Streaming),
+    Query("q98_media_dup", q98MediaDup, q98Sql),
+    Query("q144_media_pair_dup", q144MediaPairDup, q144Sql),
+    Query("q147_cdc_dedup", q147CdcDedup, q147Sql),
+    Query("q148_leakage_audit", q148LeakageAudit, q148Sql),
+    Query("q158_group_kfold", q158GroupKfold, q158Sql),
+    Query("q159_decay_value", q159DecayValue, q159Sql),
+    Query("q161_rolling_window", q161RollingWindow, q161Sql),
+    Query("q162_value_drift", q162ValueDrift, q162Sql),
+    Query("q99_expectations", q99Expectations, q99Sql),
+    Query("q100_train_manifest", q100TrainManifest, q100Sql),
+    Query("q101_class_centroids", q101ClassCentroids, q101Sql))
 }

@@ -2,65 +2,12 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
 
-/** Guards [[SparkEntry.streamingQueries]] / [[SparkEntry.stagedQueries]] —
-  * the sets [[Bench]]'s round-12 pass structure depends on (streaming
-  * queries are timed once and skipped in warmup; staged queries get the
-  * target-SF pre-stage pass). A query that starts a streaming replay but
-  * is missing from the declared set would silently run 5x in Bench again
-  * (the round-11 budget blow-up), so the streaming set is cross-checked
-  * against the SOURCE: every query function whose body contains
-  * `readStream` must be declared, and vice versa. Bench additionally
-  * cross-checks at runtime via a StreamingQueryListener
-  * (`undeclared_streaming` in the artifact) — this spec is the
-  * compile-time tripwire, that field the run-time one. */
+/** Guards [[Bench]]'s run budget: the wall estimated from the committed
+  * prior artifact must fit the driver's window. The streaming and staged
+  * sets the estimate reads are derived from each query's declared kind;
+  * DeterminismSpec checks those kinds at runtime. */
 class BenchSetsSpec extends AnyFunSuite {
-
-  private val mainDir = Paths.get("src/main/scala/graft")
-  private val queryFiles = Files.list(mainDir.resolve("queries")).iterator().asScala
-    .filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
-
-  private def lines(p: java.nio.file.Path): Seq[String] =
-    new String(Files.readAllBytes(p), "UTF-8").linesIterator.toSeq
-
-  test("declared streaming and staged sets are registered query keys") {
-    val keys = SparkEntry.queries.keySet
-    val missingS = SparkEntry.streamingQueries -- keys
-    val missingT = SparkEntry.stagedQueries -- keys
-    assert(missingS.isEmpty, s"streamingQueries not in queries: $missingS")
-    assert(missingT.isEmpty, s"stagedQueries not in queries: $missingT")
-  }
-
-  test("every streaming query is also a staged query") {
-    val diff = SparkEntry.streamingQueries -- SparkEntry.stagedQueries
-    assert(diff.isEmpty, s"streaming but not staged: $diff")
-  }
-
-  test("declared streaming set matches readStream usage in the source") {
-    val defRe = """^\s*(?:private\s+)?def\s+([A-Za-z0-9_]+)\s*[(\[]""".r
-    val regRe = """"(q[0-9]+[a-z0-9_]*)"\s*->\s*\(?([A-Za-z0-9_]+)\s+_""".r
-    val streamingFns = scala.collection.mutable.Set.empty[String]
-    val keyToFn = scala.collection.mutable.Map.empty[String, String]
-    for (f <- queryFiles) {
-      var current = ""
-      for (raw <- lines(f)) {
-        val t = raw.trim
-        defRe.findFirstMatchIn(raw).foreach(m => current = m.group(1))
-        // code lines only: a scaladoc/comment mention of readStream must
-        // not mark the enclosing function as streaming
-        val isComment = t.startsWith("*") || t.startsWith("//") || t.startsWith("/*")
-        if (!isComment && raw.contains("readStream")) streamingFns += current
-        regRe.findAllMatchIn(raw).foreach(m => keyToFn(m.group(1)) = m.group(2))
-      }
-    }
-    val derived = keyToFn.collect {
-      case (key, fn) if streamingFns(fn) => key
-    }.toSet
-    assert(derived == SparkEntry.streamingQueries,
-      s"drift — derived-from-source minus declared: ${derived -- SparkEntry.streamingQueries}; " +
-        s"declared minus derived: ${SparkEntry.streamingQueries -- derived}")
-  }
 
   test("bench wall estimated from the prior committed artifact fits the budget") {
     // Round-13 pass structure: pre-stage + (batch: 1 pass, +1 more if
@@ -95,17 +42,5 @@ class BenchSetsSpec extends AnyFunSuite {
     assert(est <= 1800.0,
       f"estimated quiet bench wall $est%.0f s exceeds the 1800 s budget — " +
         "trim passes or diet the heaviest queries before the driver run")
-  }
-
-  test("readStream appears only under graft/queries (source scan is exhaustive)") {
-    // if a helper module ever wraps readStream, the per-function scan above
-    // could no longer see it from the query body — fail here first
-    val offenders = Files.walk(mainDir).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala"))
-      .filterNot(_.toString.contains("/queries/"))
-      .filter(p => lines(p).exists(l => !l.trim.startsWith("*") &&
-        !l.trim.startsWith("//") && l.contains("readStream")))
-      .toSeq
-    assert(offenders.isEmpty, s"readStream outside queries/: $offenders")
   }
 }

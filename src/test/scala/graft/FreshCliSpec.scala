@@ -34,6 +34,8 @@ class FreshCliSpec extends AnyFunSuite with SparkSpec {
       "--policy-class", classOf[graft.policy.ShelfLife].getName,
       "--policy-state", """{"shelfLife":86400000}""")
     assert(c1 == 0, o1)
+    // the schema lookup reuses the running session without reconfiguring it
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
     val (c2, o2) = cli(reg, "retrieve", "user/info:name")
     assert(c2 == 0 && o2.contains("ShelfLife") && o2.contains("shelfLife"))
     val (c3, o3) = cli(reg, "validate", "user/info:name")

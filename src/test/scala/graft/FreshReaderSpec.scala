@@ -111,6 +111,24 @@ class FreshReaderSpec extends AnyFunSuite with SparkSpec {
     assert(mapVal(r2.freshenAll(req)) == Map("foo" -> 3))
   }
 
+  test("map-family merge needs no LAST_WIN dedup and leaves the caller's session conf alone") {
+    val key = "spark.sql.mapKeyDedupPolicy"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "EXCEPTION")
+    try {
+      val rowData = Fixtures.rowDataTest(spark)
+      val m = managerFor("table" -> rowData)
+      m.storePolicy("table", ColumnName("map"),
+        classOf[MapIncrement].getName, new AlwaysFreshen)
+      val r = FreshReader.builder(m).withTable("table", rowData).withAsOf(100L).build()
+      val v = r.freshenAll(DataRequest(Seq(ColumnName("map"))))
+        .filter(col("entity_id") === "foo")
+        .selectExpr("map['qualifier'][0].value AS v").collect().map(_.getInt(0)).toSeq
+      assert(v == Seq(2))
+      assert(spark.conf.get(key) == "EXCEPTION")
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("family-level freshener yields ONE capsule even when several qualifiers are requested") {
     val rowData = Fixtures.rowDataTest(spark)
     val m = managerFor("table" -> rowData)

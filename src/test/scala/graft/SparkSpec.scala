@@ -3,21 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local SparkSession for the whole suite (per-suite sessions
-  * would dominate test wall time). */
+  * would dominate test wall time), built like every other session. */
 trait SparkSpec {
   lazy val spark: SparkSession = SparkSpec.session
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = GraftSession(4)
 }
